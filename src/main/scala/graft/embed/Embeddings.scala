@@ -1,9 +1,11 @@
 package graft.embed
 
 import java.security.MessageDigest
-import java.util.concurrent.{Executors, Semaphore, TimeUnit}
-import scala.concurrent.{Await, ExecutionContext, Future}
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException,
+  Executors, RejectedExecutionException, Semaphore, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** Pluggable embedding backend — the Spark-side contract of the reference's
   * async Bedrock operator (reference
@@ -19,6 +21,13 @@ trait EmbeddingProvider extends Serializable {
   def dim: Int
   /** Embed one text. Called from executor threads; must be thread-safe. */
   def embed(text: String): EmbeddingResult
+
+  /** Embed one text without blocking the caller. The default runs [[embed]]
+    * on [[EmbeddingStage]]'s bounded per-JVM pool, and `cancel(true)`
+    * interrupts a running call. A provider with a non-blocking client
+    * overrides this so that no thread waits while the model answers. */
+  def embedAsync(text: String): CompletableFuture[EmbeddingResult] =
+    EmbeddingStage.onPool(() => embed(text))
 }
 
 final case class EmbeddingResult(embedding: Array[Float], inputTextTokenCount: Int)
@@ -76,84 +85,81 @@ final case class StubEmbeddingProvider(modelAlias: String = "titan-v1", seed: Lo
   }
 }
 
-/** Bounded-concurrency batch embedding — Spark's analogue of Flink's
+/** Bounded-concurrency embedding — Spark's analogue of Flink's
   * `AsyncDataStream.unorderedWait(…, capacity = 1000)` (reference
   * `DataStreamJob.java:148-154`).
   *
-  * Spark has no per-record async operator; within each partition we submit
-  * texts to a shared per-JVM pool, capped by a semaphore of `maxInFlight`
-  * permits (the reference's capacity 1000). Partitions complete unordered
-  * relative to each other — the same unorderedness the reference opts into.
-  * For remote providers this overlaps network latency across the partition;
-  * for the local stub it degrades gracefully to a tight loop.
+  * Each task embeds its partition through one sliding window of
+  * [[EmbeddingProvider.embedAsync]] calls: up to `maxInFlight` calls are
+  * outstanding per task, as Flink's capacity is per subtask. Results come
+  * out in input order, and the window refills as its head completes. A
+  * provider with a non-blocking client (the HTTP one) holds no thread while
+  * its calls wait; a blocking provider runs on a shared per-JVM pool of
+  * `min(2 × cores, 64)` threads. Partitions complete unordered relative to
+  * each other — the same unorderedness the reference opts into.
   */
 object EmbeddingStage {
-  private val poolSize = math.min(Runtime.getRuntime.availableProcessors() * 2, 64)
-  // One pool + semaphore per executor JVM, shared across partitions/tasks.
-  // Kept as an ExecutorService (not just an ExecutionContext) so a
-  // timed-out call can be cancel(true)-interrupted — see embedIteratorSafe.
-  lazy val pool: java.util.concurrent.ExecutorService =
-    Executors.newFixedThreadPool(poolSize, r => {
-      val t = new Thread(r, "graft-embed"); t.setDaemon(true); t
-    })
-  lazy val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+  private[embed] val poolSize = math.min(Runtime.getRuntime.availableProcessors() * 2, 64)
+  private lazy val pool = Executors.newFixedThreadPool(poolSize, r => {
+    val t = new Thread(r, "graft-embed"); t.setDaemon(true); t
+  })
+  // Cancelled calls still running on a pool thread. When they hold every
+  // thread, the provider ignores interrupts and the pool is stuck.
+  private val abandoned = new AtomicInteger()
 
-  def embedIterator(
-      texts: Iterator[String],
-      provider: EmbeddingProvider,
-      maxInFlight: Int = 1000,
-      batchSize: Int = 256,
-      timeout: Duration = 15000.millis): Iterator[EmbeddingResult] = {
-    val permits = new Semaphore(maxInFlight)
-    texts.grouped(batchSize).flatMap { batch =>
-      val futures = batch.map { t =>
-        permits.acquire()
-        Future {
-          try provider.embed(t)
-          finally permits.release()
-        }(ec)
-      }
-      futures.map(f => Await.result(f, timeout))
-    }
-  }
+  private final val Queued = 0
+  private final val Running = 1
+  private final val Interrupting = 2
+  private final val Finished = 3
 
-  /** One embed call under a [[RetryPolicy]]: retries transient failures with
-    * exponential backoff, then converts a final failure into a Left(error)
-    * instead of throwing — the record routes to the dead-letter channel and
-    * the task (and the partition's successful calls) survives.
-    *
-    * Only `NonFatal` throwables are retried/dead-lettered: a VM error
-    * (OutOfMemoryError etc.) is an infra failure that must kill the task so
-    * Spark retries it on a healthy executor — recording it as a per-record
-    * data error would permanently dead-letter a good document. An interrupt
-    * during backoff (task kill) likewise propagates after restoring the
-    * interrupt flag. */
-  def embedWithRetry(text: String, provider: EmbeddingProvider,
-                     policy: RetryPolicy): Either[String, EmbeddingResult] = {
-    var attempt = 1
-    var backoff = policy.initialBackoffMs
-    while (true) {
-      try return Right(provider.embed(text))
-      catch {
-        case scala.util.control.NonFatal(_) if attempt < policy.maxAttempts =>
-          attempt += 1
-          try Thread.sleep(backoff)
-          catch {
-            case ie: InterruptedException =>
-              Thread.currentThread().interrupt()
-              throw ie
-          }
-          backoff = (backoff * policy.backoffMultiplier).toLong
-        case scala.util.control.NonFatal(e) =>
-          return Left(
-            s"${e.getClass.getName}: ${String.valueOf(e.getMessage)} (after $attempt attempts)")
+  /** A blocking call on the pool, as a future. `cancel` drops a queued call.
+    * A running call is interrupted, and its future completes only when the
+    * call returns: a caller that counts outstanding calls keeps counting one
+    * that ignores the interrupt. */
+  private final class PoolCall[T](call: () => T) extends CompletableFuture[T] with Runnable {
+    private val state = new AtomicInteger(Queued)
+    @volatile private var runner: Thread = _
+
+    override def run(): Unit = {
+      runner = Thread.currentThread()
+      if (state.compareAndSet(Queued, Running)) {
+        try complete(call())
+        catch { case t: Throwable => completeExceptionally(t) }
+        finally if (!state.compareAndSet(Running, Finished)) {
+          // cancelled while running: take the interrupt here, so that it
+          // cannot reach the next call this pool thread runs
+          while (state.get == Interrupting) Thread.onSpinWait()
+          Thread.interrupted()
+          abandoned.decrementAndGet()
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
+
+    override def cancel(mayInterruptIfRunning: Boolean): Boolean =
+      if (state.compareAndSet(Queued, Finished)) super.cancel(false)
+      else {
+        if (state.compareAndSet(Running, Interrupting)) {
+          abandoned.incrementAndGet()
+          runner.interrupt()
+          state.set(Finished)
+        }
+        false
+      }
   }
 
-  /** Worst-case wall-clock of one [[embedWithRetry]] call: every attempt
-    * may take up to `perAttempt`, plus the full backoff series. */
+  private[embed] def onPool[T](call: () => T): CompletableFuture[T] =
+    if (abandoned.get >= poolSize)
+      CompletableFuture.failedFuture(new RejectedExecutionException(
+        s"embedding pool exhausted: all $poolSize threads held by timed-out calls " +
+          "that ignore interrupts"))
+    else {
+      val c = new PoolCall(call)
+      pool.execute(c)
+      c
+    }
+
+  /** Worst-case wall-clock of one record: every attempt may take up to
+    * `perAttempt`, plus the full backoff series. */
   private[embed] def retryBudget(perAttempt: Duration, policy: RetryPolicy): Duration = {
     var backoffTotal = 0L
     var b = policy.initialBackoffMs
@@ -166,77 +172,137 @@ object EmbeddingStage {
     perAttempt * policy.maxAttempts.toLong + backoffTotal.millis
   }
 
-  /** [[embedIterator]] with per-record retry + error capture. Same bounded
-    * concurrency; the output is an Either per input in order. The await
-    * budget scales with the retry policy (attempts × per-attempt timeout +
-    * backoff), and a blown budget becomes a Left — a stuck provider call
-    * costs one dead-letter row, not the task.
+  /** Embeds `texts` through one window of up to `maxInFlight` outstanding
+    * calls, with per-record retry and error capture. The output is an Either
+    * per input, in input order.
     *
-    * A timed-out call is `cancel(true)`-interrupted so an interrupt-honoring
-    * provider (any socket read, [[HttpEmbeddingProvider]]'s per-request
-    * timeout) unblocks and releases its permit. For a provider that ignores
-    * interrupts the permit does leak — so permit acquisition itself is
-    * bounded: when every permit is held by hung calls, subsequent records
-    * fail fast into the dead-letter channel instead of deadlocking the
-    * task. */
+    * Each record is retried under `policy`: a `NonFatal` failure waits out
+    * its backoff on a timer (no thread sleeps) and is sent again; the last
+    * failure becomes a Left — the record routes to the dead-letter channel
+    * and the task, with its successful calls, survives. A fatal error (a VM
+    * error such as OutOfMemoryError) kills the task instead, so Spark retries
+    * it on a healthy executor rather than dead-lettering a good document.
+    * An interrupt of the consuming thread (task kill) cancels the window and
+    * propagates.
+    *
+    * A record has `retryBudget(timeout, policy)` from its admission to the
+    * window; a record unresolved past it becomes a Left and its call is
+    * cancelled. A call that honours the cancellation (an HTTP call, any
+    * interruptible read) frees its slot at once. One that ignores it keeps
+    * its slot: when every slot is held that way, later records fail fast
+    * into the dead-letter channel instead of deadlocking the task, until a
+    * slot comes back. */
   def embedIteratorSafe(
       texts: Iterator[String],
       provider: EmbeddingProvider,
       policy: RetryPolicy = RetryPolicy(),
       maxInFlight: Int = 1000,
-      batchSize: Int = 256,
-      timeout: Duration = 15000.millis): Iterator[Either[String, EmbeddingResult]] = {
-    val permits = new Semaphore(maxInFlight)
-    val budget = retryBudget(timeout, policy)
-    // after one exhaustion detection, later records probe with zero wait
-    // (fail FAST, not one full budget each); a permit coming back — an
-    // interrupted call finally releasing — clears the flag and resumes
-    var exhausted = false
-    final case class Submitted(
-        jf: java.util.concurrent.Future[Either[String, EmbeddingResult]],
-        claimed: java.util.concurrent.atomic.AtomicBoolean)
-    texts.grouped(batchSize).flatMap { batch =>
-      val submitted: Seq[Either[String, Submitted]] =
-        batch.map { t =>
+      timeout: Duration = 15000.millis): EmbedWindow =
+    new EmbedWindow(texts, provider, policy, maxInFlight, timeout)
+
+  final class EmbedWindow private[EmbeddingStage] (
+      texts: Iterator[String],
+      provider: EmbeddingProvider,
+      policy: RetryPolicy,
+      maxInFlight: Int,
+      timeout: Duration) extends Iterator[Either[String, EmbeddingResult]] {
+    require(maxInFlight >= 1, s"maxInFlight must be >= 1: $maxInFlight")
+    private val budget = retryBudget(timeout, policy)
+    // one permit per outstanding call, released when the call returns
+    private val slots = new Semaphore(maxInFlight)
+    // admitted records not yet emitted, in input order
+    private val window = new java.util.ArrayDeque[Record](math.min(maxInFlight, 1024))
+    // after one slot wait runs out, later records probe with zero wait (fail
+    // FAST, not one full budget each); a slot coming back resumes
+    private var exhausted = false
+
+    override def hasNext: Boolean = !window.isEmpty || texts.hasNext
+
+    override def next(): Either[String, EmbeddingResult] = {
+      if (!hasNext) throw new NoSuchElementException("next on empty embed window")
+      try {
+        if (window.isEmpty) {
+          // every slot held here belongs to a call of an emitted record
           val got =
-            if (exhausted) permits.tryAcquire()
-            else permits.tryAcquire(budget.toMillis, TimeUnit.MILLISECONDS)
+            if (exhausted) slots.tryAcquire()
+            else slots.tryAcquire(budget.toMillis, TimeUnit.MILLISECONDS)
+          exhausted = !got
           if (!got) {
-            exhausted = true
-            Left(s"embedding pool exhausted: all $maxInFlight permits held " +
-              s"beyond $budget — provider is hung and ignoring interrupts")
-          } else {
-            exhausted = false
-            // exactly-once permit release, decided by CAS: the task runs the
-            // provider only if it claims first; a canceller that claims
-            // first owns the release (a task cancelled while still QUEUED
-            // never executes its finally — the round-2 leak)
-            val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
-            val jf = pool.submit(new java.util.concurrent.Callable[Either[String, EmbeddingResult]] {
-              override def call(): Either[String, EmbeddingResult] =
-                if (!claimed.compareAndSet(false, true))
-                  Left("cancelled before start") // canceller released the permit
-                else
-                  try embedWithRetry(t, provider, policy)
-                  finally permits.release()
-            })
-            Right(Submitted(jf, claimed))
+            texts.next()
+            return Left(s"embed window exhausted: all $maxInFlight slots held beyond " +
+              s"$budget by calls that ignore cancellation")
           }
+          window.add(new Record(texts.next()))
         }
-      submitted.map {
-        case Left(err) => Left(err)
-        case Right(Submitted(jf, claimed)) =>
-          try jf.get(budget.toMillis, TimeUnit.MILLISECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              jf.cancel(true) // interrupt so a RUNNING call unblocks + releases
-              if (claimed.compareAndSet(false, true))
-                permits.release() // never started: the release is ours
-              Left(s"embed timed out after $budget (incl. ${policy.maxAttempts} attempts)")
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause // only fatal/interrupt escapes embedWithRetry
-          }
+        while (window.size < maxInFlight && texts.hasNext && slots.tryAcquire())
+          window.add(new Record(texts.next()))
+        val head = window.poll()
+        try head.result.get(math.max(head.deadline - System.nanoTime(), 0L), TimeUnit.NANOSECONDS)
+        catch {
+          case _: TimeoutException =>
+            head.cancel()
+            Left(s"embed timed out after $budget (incl. ${policy.maxAttempts} attempts)")
+          case e: ExecutionException =>
+            cancel()
+            throw e.getCause
+        }
+      } catch {
+        case ie: InterruptedException =>
+          cancel()
+          throw ie
       }
     }
+
+    /** Cancels every record not yet emitted. Call it when the consumer
+      * stops early, so that no call or retry outlives the task. */
+    def cancel(): Unit = {
+      window.forEach(_.cancel())
+      window.clear()
+    }
+
+    /** One admitted record: holds its slot from admission until its last
+      * attempt returns. */
+    private final class Record(text: String) {
+      val deadline: Long = System.nanoTime() + budget.toNanos
+      val result = new CompletableFuture[Either[String, EmbeddingResult]]()
+      @volatile private var attempt: CompletableFuture[EmbeddingResult] = _
+      @volatile private var cancelled = false
+
+      send(1, policy.initialBackoffMs)
+
+      private def send(n: Int, backoffMs: Long): Unit = {
+        val f =
+          try provider.embedAsync(text)
+          catch { case t: Throwable => CompletableFuture.failedFuture[EmbeddingResult](t) }
+        attempt = f
+        if (cancelled) f.cancel(true)
+        f.whenComplete { (r, err) =>
+          val e = unwrap(err)
+          if (e != null && NonFatal(e) && !cancelled && n < policy.maxAttempts)
+            CompletableFuture.delayedExecutor(backoffMs, TimeUnit.MILLISECONDS).execute { () =>
+              if (cancelled) slots.release()
+              else send(n + 1, (backoffMs * policy.backoffMultiplier).toLong)
+            }
+          else {
+            if (e == null) result.complete(Right(r))
+            else if (NonFatal(e)) result.complete(Left(
+              s"${e.getClass.getName}: ${String.valueOf(e.getMessage)} (after $n attempts)"))
+            else result.completeExceptionally(e)
+            slots.release()
+          }
+        }
+      }
+
+      def cancel(): Unit = {
+        cancelled = true
+        val f = attempt
+        if (f != null) f.cancel(true)
+      }
+    }
+  }
+
+  private def unwrap(t: Throwable): Throwable = t match {
+    case c: CompletionException if c.getCause != null => unwrap(c.getCause)
+    case other => other
   }
 }

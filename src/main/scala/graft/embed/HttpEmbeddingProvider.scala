@@ -3,6 +3,7 @@ package graft.embed
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 
 /** Generic HTTP/JSON embedding provider — the process-boundary-crossing
   * implementation of [[EmbeddingProvider]] that the reference's async
@@ -16,17 +17,21 @@ import java.nio.charset.StandardCharsets
   * `POST {"inputText": "…"}`; response: `{"embedding": [f, …],
   * "inputTextTokenCount": n}`.
   *
-  * Failure contract (what [[EmbeddingStage.embedIteratorSafe]] relies on):
+  * Failure contract (what [[EmbeddingStage.embedIteratorSafe]] relies on),
+  * the same for [[embed]] and [[embedAsync]]:
   *  - non-2xx → `IOException` (retryable, then dead-letter);
+  *  - a body without the model's dimension → `IOException`;
   *  - connect/read beyond the configured timeouts → `HttpTimeoutException`
   *    (an `IOException` — the call is SELF-bounding, it can't hold a
-  *    concurrency permit past `requestTimeoutMs`);
-  *  - thread interrupt (a cancelled in-flight call) → `InterruptedException`
-  *    propagates and releases the permit.
+  *    window slot past `requestTimeoutMs`);
+  *  - thread interrupt of a blocking [[embed]] → `InterruptedException`
+  *    propagates.
   *
-  * Thread-safe: `HttpClient` is immutable/thread-safe and `@transient lazy`
-  * so the case class serializes to executors and each JVM builds its own
-  * client.
+  * [[embedAsync]] uses `HttpClient.sendAsync`, so no thread is held while
+  * the model answers. The `HttpClient` is immutable and thread-safe, and it
+  * comes from one per-JVM cache keyed by `connectTimeoutMs`: the case class
+  * serializes to executors, and every deserialized copy there shares one
+  * client, whose keep-alive connections outlive tasks, runs and micro-batches.
   */
 final case class HttpEmbeddingProvider(
     endpoint: String,
@@ -36,18 +41,24 @@ final case class HttpEmbeddingProvider(
 
   override val dim: Int = EmbeddingModels.dimOf(modelAlias)
 
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofMillis(connectTimeoutMs))
-    .build()
+  @transient private lazy val client: HttpClient = HttpEmbeddingProvider.sharedClient(connectTimeoutMs)
 
-  override def embed(text: String): EmbeddingResult = {
-    val req = HttpRequest.newBuilder(URI.create(endpoint))
+  override def embed(text: String): EmbeddingResult =
+    decode(client.send(request(text), HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8)))
+
+  override def embedAsync(text: String): CompletableFuture[EmbeddingResult] =
+    client.sendAsync(request(text), HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
+      .thenApply(decode(_))
+
+  private def request(text: String): HttpRequest =
+    HttpRequest.newBuilder(URI.create(endpoint))
       .timeout(java.time.Duration.ofMillis(requestTimeoutMs))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(
         s"""{"inputText": ${JsonCodec.quote(text)}}""", StandardCharsets.UTF_8))
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
+
+  private def decode(resp: HttpResponse[String]): EmbeddingResult = {
     if (resp.statusCode() / 100 != 2)
       throw new java.io.IOException(
         s"embedding endpoint HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
@@ -57,6 +68,15 @@ final case class HttpEmbeddingProvider(
         s"embedding endpoint returned ${vec.length} dims, expected $dim")
     EmbeddingResult(vec, tokens)
   }
+}
+
+object HttpEmbeddingProvider {
+  private val clients = new ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+  private def sharedClient(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, ms => HttpClient.newBuilder()
+      .connectTimeout(java.time.Duration.ofMillis(ms))
+      .build())
 }
 
 /** Minimal JSON encode/decode for the embedding wire shape — enough for the

@@ -1,9 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.embed.{EmbeddingProvider, EmbeddingStage, StubEmbeddingProvider}
+import graft.embed.{EmbeddingProvider, EmbeddingResult, EmbeddingStage, RetryPolicy,
+  StubEmbeddingProvider}
 
 /** The reference topology, rebuilt Spark-first (SURVEY §2a S1→O5):
   *
@@ -74,34 +76,48 @@ object RagPipeline {
         col("passage").as("text"),
         col("created_at"))
 
-  /** O4 — embedding via bounded-concurrency mapPartitions (the Spark
-    * analogue of `AsyncDataStream.unorderedWait(…, 1000)`). Typed
-    * Dataset in/out so Tungsten handles the row format. */
+  /** O4 — embedding, the Spark analogue of
+    * `AsyncDataStream.unorderedWait(…, 1000)`: each task embeds its
+    * partition through one window of up to `maxInFlight` outstanding calls
+    * ([[EmbeddingStage.embedIteratorSafe]]). One attempt per record, no
+    * dead letters: a failed record fails the task, and Spark retries it.
+    * Typed Dataset in/out so Tungsten handles the row format. */
   def embed(df: DataFrame, provider: EmbeddingProvider,
             maxInFlight: Int = 1000): Dataset[EmbeddedRecord] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("text"), col("created_at"), col("_id"))
-      .as[EnrichedMessage]
-      .mapPartitions { it =>
-        val (texts, metas) = it.duplicate
-        val results = EmbeddingStage.embedIterator(texts.map(_.text), provider, maxInFlight)
-        metas.zip(results).map { case (m, r) =>
-          EmbeddedRecord(m.text, m.created_at, m._id, r.embedding, r.inputTextTokenCount)
-        }
-      }
+    embedPartitions(df, provider, RetryPolicy(maxAttempts = 1), maxInFlight) {
+      case (m, Right(r)) =>
+        EmbeddedRecord(m.text, m.created_at, m._id, r.embedding, r.inputTextTokenCount)
+      case (m, Left(err)) =>
+        throw new IllegalStateException(s"embedding failed for _id ${m._id}: $err")
+    }
   }
 
-  /** O4 with dead letters — [[embed]] plus bounded retry and per-record
-    * error capture. Output: [[graft.model.EmbeddedAttempt]] rows where
-    * exactly one of `embedding`/`embed_error` is non-null. Split with
-    * [[embedSuccesses]] / [[embedDeadLetters]]. The reference's async
-    * operator emits a null poison pill on failure and the sink NPEs
+  /** O4 with dead letters — the same window as [[embed]], plus bounded
+    * retry and per-record error capture. Output:
+    * [[graft.model.EmbeddedAttempt]] rows where exactly one of
+    * `embedding`/`embed_error` is non-null. Split with [[embedSuccesses]] /
+    * [[embedDeadLetters]]. The reference's async operator emits a null
+    * poison pill on failure and the sink NPEs
     * (`…BedRockEmbeddingModelAsyncCustomMessage.java:109-117`); here a
     * failing record costs one dead-letter row, never the job. */
   def embedSafe(df: DataFrame, provider: EmbeddingProvider,
-                policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy(),
+                policy: RetryPolicy = RetryPolicy(),
                 maxInFlight: Int = 1000): Dataset[EmbeddedAttempt] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    embedPartitions(df, provider, policy, maxInFlight) {
+      case (m, Right(r)) =>
+        EmbeddedAttempt(m.text, m.created_at, m._id, r.embedding, r.inputTextTokenCount, null)
+      case (m, Left(err)) =>
+        EmbeddedAttempt(m.text, m.created_at, m._id, null, 0, err)
+    }
+  }
+
+  private def embedPartitions[T: Encoder](df: DataFrame, provider: EmbeddingProvider,
+      policy: RetryPolicy, maxInFlight: Int)(
+      emit: (EnrichedMessage, Either[String, EmbeddingResult]) => T): Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("text"), col("created_at"), col("_id"))
@@ -110,13 +126,9 @@ object RagPipeline {
         val (texts, metas) = it.duplicate
         val results = EmbeddingStage.embedIteratorSafe(
           texts.map(_.text), provider, policy, maxInFlight)
-        metas.zip(results).map {
-          case (m, Right(r)) =>
-            EmbeddedAttempt(m.text, m.created_at, m._id, r.embedding,
-              r.inputTextTokenCount, null)
-          case (m, Left(err)) =>
-            EmbeddedAttempt(m.text, m.created_at, m._id, null, 0, err)
-        }
+        // a task that stops early (failure, kill, limit) leaves no call behind
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => results.cancel()))
+        metas.zip(results).map { case (m, r) => emit(m, r) }
       }
   }
 
@@ -175,11 +187,12 @@ object RagPipeline {
       sink: graft.sink.VectorSink,
       checkpointDir: String,
       provider: EmbeddingProvider = StubEmbeddingProvider(),
-      chunking: Option[(Int, Int)] = None) = {
+      chunking: Option[(Int, Int)] = None,
+      maxInFlight: Int = 1000) = {
     val raw = spark.readStream.schema(Schemas.wire).option("mode", "PERMISSIVE")
       .json(sourceDir)
       .select(to_json(struct(col("text"), col("created_at"))).as("value"))
-    val docs = batchStages(raw, provider, chunking)
+    val docs = batchStages(raw, provider, chunking, maxInFlight)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
@@ -200,8 +213,9 @@ object RagPipeline {
   }
 
   private def batchStages(raw: DataFrame, provider: EmbeddingProvider,
-                          chunking: Option[(Int, Int)] = None): DataFrame =
-    toVectorDocs(embed(preEmbed(raw, chunking), provider))
+                          chunking: Option[(Int, Int)] = None,
+                          maxInFlight: Int = 1000): DataFrame =
+    toVectorDocs(embed(preEmbed(raw, chunking), provider, maxInFlight))
 
   /** [[streaming]] with the dead-letter-capturing embed stage: per micro
     * batch, successes land in the idempotent vector table and embed
@@ -215,7 +229,7 @@ object RagPipeline {
       deadLetterDir: String,
       checkpointDir: String,
       provider: EmbeddingProvider = StubEmbeddingProvider(),
-      policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy()) =
+      policy: RetryPolicy = RetryPolicy()) =
     streamingSafeTo(spark, sourceDir, graft.sink.ParquetVectorSink(outDir),
       deadLetterDir, checkpointDir, provider, policy)
 
@@ -227,8 +241,9 @@ object RagPipeline {
       deadLetterDir: String,
       checkpointDir: String,
       provider: EmbeddingProvider = StubEmbeddingProvider(),
-      policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy(),
-      chunking: Option[(Int, Int)] = None) = {
+      policy: RetryPolicy = RetryPolicy(),
+      chunking: Option[(Int, Int)] = None,
+      maxInFlight: Int = 1000) = {
     val raw = spark.readStream.schema(Schemas.wire).option("mode", "PERMISSIVE")
       .json(sourceDir)
       .select(to_json(struct(col("text"), col("created_at"))).as("value"))
@@ -236,7 +251,7 @@ object RagPipeline {
     enriched.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        val attempts = embedSafe(batchDf, provider, policy).cache()
+        val attempts = embedSafe(batchDf, provider, policy, maxInFlight).cache()
         try {
           sink.appendIdempotent(toVectorDocs(embedSuccesses(attempts)), batchId)
           embedDeadLetters(attempts)
@@ -300,10 +315,11 @@ object RagPipeline {
       startingOffsets: String = "earliest",
       extra: Map[String, String] = Map.empty,
       provider: EmbeddingProvider = StubEmbeddingProvider(),
-      chunking: Option[(Int, Int)] = None) = {
+      chunking: Option[(Int, Int)] = None,
+      maxInFlight: Int = 1000) = {
     val sink = graft.sink.ParquetVectorSink(outDir)
     val raw = streamingKafkaSource(spark, bootstrapServers, topic, startingOffsets, extra)
-    batchStages(raw, provider, chunking).writeStream
+    batchStages(raw, provider, chunking, maxInFlight).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
         sink.appendIdempotent(batchDf, batchId)

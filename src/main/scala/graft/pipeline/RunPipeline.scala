@@ -37,8 +37,9 @@ import graft.embed.{EmbeddingModels, RetryPolicy, StubEmbeddingProvider}
   *  - `embed.endpoint`  HTTP embedding endpoint URL → uses
   *                      [[graft.embed.HttpEmbeddingProvider]]; absent → the
   *                      deterministic stub (no-egress default)
-  *  - `embed.maxInFlight`  bounded concurrency (default 1000, the
-  *                      reference's `unorderedWait` capacity)
+  *  - `embed.maxInFlight`  embed calls outstanding per task, every mode
+  *                      (default 1000, the reference's `unorderedWait`
+  *                      capacity, which Flink applies per subtask)
   *  - `embed.maxAttempts`  retry attempts before dead-letter (default 3)
   *  - `deadletter.dir`  where embed dead-letters land (batch + streaming;
   *                      streaming uses the per-batch idempotent layout)
@@ -75,6 +76,7 @@ final case class PipelineConfig(settings: Map[String, String]) {
     if (sinkKind == "http") { apply("sink.endpoint"); apply("sink.index") }
     else apply("sink.dir")
     if (mode != "batch") apply("checkpoint.dir")
+    require(maxInFlight >= 1, s"embed.maxInFlight must be >= 1: $maxInFlight")
     this
   }
 }
@@ -171,9 +173,10 @@ object RunPipeline {
       case "streaming" =>
         val q = conf.get("deadletter.dir") match {
           case Some(dl) => RagPipeline.streamingSafeTo(spark, conf("source.path"),
-            sink, dl, conf("checkpoint.dir"), provider, conf.retryPolicy, chunking)
+            sink, dl, conf("checkpoint.dir"), provider, conf.retryPolicy, chunking,
+            conf.maxInFlight)
           case None => RagPipeline.streamingTo(spark, conf("source.path"),
-            sink, conf("checkpoint.dir"), provider, chunking)
+            sink, conf("checkpoint.dir"), provider, chunking, conf.maxInFlight)
         }
         awaitWithTimeout(q, conf)
 
@@ -181,7 +184,7 @@ object RunPipeline {
         val q = RagPipeline.streamingKafka(spark, conf("kafka.bootstrap"),
           conf("kafka.topic"), conf("sink.dir"), conf("checkpoint.dir"),
           conf.getOrElse("kafka.startingOffsets", "earliest"),
-          conf.kafkaExtra, provider, chunking)
+          conf.kafkaExtra, provider, chunking, conf.maxInFlight)
         awaitWithTimeout(q, conf)
     }
   }

@@ -2,12 +2,14 @@ package graft.pipeline
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.{ConcurrentHashMap, Executors}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import graft.embed.{EmbeddingStage, HttpEmbeddingProvider, RetryPolicy, StubEmbeddingProvider}
@@ -42,6 +44,9 @@ class HttpEmbedSpec extends AnyFunSuite {
         // crude but sufficient: the test texts contain no escapes
         val text = req.split("\"inputText\"\\s*:\\s*\"")(1).takeWhile(_ != '"')
         def respond(code: Int, payload: String): Unit = {
+          // leaves the count before the first response byte, so the client
+          // cannot have sent its next call yet
+          inFlight.decrementAndGet()
           val bytes = payload.getBytes(StandardCharsets.UTF_8)
           ex.sendResponseHeaders(code, bytes.length)
           ex.getResponseBody.write(bytes)
@@ -61,7 +66,9 @@ class HttpEmbedSpec extends AnyFunSuite {
           respond(200,
             s"""{"embedding": [${r.embedding.mkString(", ")}], "inputTextTokenCount": ${r.inputTextTokenCount}}""")
         }
-      } catch { case _: InterruptedException => ex.close() }
+      } catch {
+        case _: InterruptedException => inFlight.decrementAndGet(); ex.close()
+      }
     })
     server.start()
     try body(s"http://127.0.0.1:${server.getAddress.getPort}/embed", inFlight, maxInFlight)
@@ -86,14 +93,16 @@ class HttpEmbedSpec extends AnyFunSuite {
       val t0 = System.nanoTime()
       val out = EmbeddingStage.embedIteratorSafe(
         texts.iterator, p, RetryPolicy(maxAttempts = 1),
-        maxInFlight = 32, batchSize = 64, timeout = 5.seconds).toVector
+        maxInFlight = 32, timeout = 5.seconds).toVector
       val wallMs = (System.nanoTime() - t0) / 1e6
       assert(out.forall(_.isRight))
       // serial floor is 64 × 100 ms = 6.4 s; 32-way overlap needs ~2 × 100 ms.
       // 3 s keeps the assertion an order-of-magnitude, not a race.
       assert(wallMs < 3000, s"expected overlapped wall clock, got $wallMs ms")
-      assert(maxSeen.get() >= 8,
-        s"server high-water in-flight ${maxSeen.get()} — calls did not overlap")
+      // the window, not a thread pool, is the bound: it fills to exactly
+      // maxInFlight and never beyond
+      assert(maxSeen.get() == 32,
+        s"server high-water in-flight ${maxSeen.get()}, window is 32")
     }
   }
 
@@ -103,7 +112,7 @@ class HttpEmbedSpec extends AnyFunSuite {
       val texts = Seq("good one", "flaky then fine", "dead forever", "good two")
       val out = EmbeddingStage.embedIteratorSafe(
         texts.iterator, p, RetryPolicy(maxAttempts = 3, initialBackoffMs = 10),
-        maxInFlight = 4, batchSize = 8, timeout = 5.seconds).toVector
+        maxInFlight = 4, timeout = 5.seconds).toVector
       assert(out(0).isRight && out(1).isRight && out(3).isRight)
       assert(out(2).isLeft)
       assert(out(2).left.exists(_.contains("HTTP 500")))
@@ -114,16 +123,48 @@ class HttpEmbedSpec extends AnyFunSuite {
   test("a hung endpoint costs one dead-letter, not the task (permit released)") {
     withServer() { (url, _, _) =>
       // per-request timeout 300 ms bounds the provider call itself: the
-      // permit can't be held past it even though the server never answers
+      // slot can't be held past it even though the server never answers
       val p = HttpEmbeddingProvider(url, requestTimeoutMs = 300)
       val texts = Seq("hang a", "hang b", "good after hang 1", "good after hang 2")
       val out = EmbeddingStage.embedIteratorSafe(
         texts.iterator, p, RetryPolicy(maxAttempts = 1),
-        // maxInFlight = 2: both permits go to the hung calls first — the
-        // good records only complete if those permits come back
-        maxInFlight = 2, batchSize = 4, timeout = 1.second).toVector
+        // maxInFlight = 2: both slots go to the hung calls first — the
+        // good records only complete if those slots come back
+        maxInFlight = 2, timeout = 1.second).toVector
       assert(out(0).isLeft && out(1).isLeft)
       assert(out(2).isRight && out(3).isRight)
+    }
+  }
+
+  test("streaming RunPipeline honours embed.maxInFlight, with and without dead letters") {
+    withServer(latencyMs = 50) { (url, _, maxSeen) =>
+      val spark = graft.TestSpark.spark
+      for (deadLetters <- Seq(false, true)) {
+        maxSeen.set(0)
+        val tmp = Files.createTempDirectory("graft-mif")
+        val src = Files.createDirectory(tmp.resolve("src"))
+        // one small file is one partition, so the server sees one task's window
+        Files.write(src.resolve("in.jsonl"), (1 to 48).map(i =>
+          s"""{"text": "doc number $i", "created_at": "2024-01-01T12:00:00.000Z"}""")
+          .mkString("\n").getBytes(StandardCharsets.UTF_8))
+        val table = s"httpembedspec-mif-$deadLetters"
+        graft.sink.MemoryVectorSink.clear(table)
+        val conf = PipelineConfig.parse(Seq(
+          "mode=streaming", s"source.path=$src", "sink.kind=memory", s"sink.dir=$table",
+          s"checkpoint.dir=${tmp.resolve("ck")}", "model=titan-v2", "timeout.s=120",
+          s"embed.endpoint=$url", "embed.maxInFlight=4") ++
+          (if (deadLetters) Seq(s"deadletter.dir=${tmp.resolve("dead")}") else Nil)).validated
+        val run = Future(RunPipeline.run(spark, conf))(ExecutionContext.global)
+        val deadline = System.nanoTime() + 60.seconds.toNanos
+        while (graft.sink.MemoryVectorSink.read(table).size < 48 && System.nanoTime() < deadline)
+          Thread.sleep(100)
+        spark.streams.active.foreach(_.stop())
+        Await.result(run, 60.seconds)
+        assert(graft.sink.MemoryVectorSink.read(table).size === 48)
+        assert(maxSeen.get() <= 4, s"server high-water ${maxSeen.get()} above embed.maxInFlight=4")
+        assert(maxSeen.get() >= 2, s"server high-water ${maxSeen.get()}: calls did not overlap")
+        graft.sink.MemoryVectorSink.clear(table)
+      }
     }
   }
 }

@@ -16,8 +16,8 @@ object CoreScaling {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val k = args(1).toInt
-    // same bound as ReplicateDocs: replica id offsets are r*10M, so doc_ids
-    // must stay below 10M and k small enough that offsets never collide
+    // a sanity cap on the size of the in-memory replication (k copies of
+    // the corpus); the r*10M id offsets cannot collide while doc_ids < 10M
     require(k >= 1 && k <= 100, s"k must be in [1, 100]: $k")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
